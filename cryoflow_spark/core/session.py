@@ -17,7 +17,7 @@ import os
 from contextlib import contextmanager
 from typing import Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -107,6 +107,22 @@ def bounded_iteration(spark: SparkSession, n_rows: int,
         spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
         if tiny:
             spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def collect_scalar(df: DataFrame):
+    """The one bounded driver scalar: the single value of a 1-row,
+    1-column ``df`` (typically a global ``agg``), fetched with ONE
+    action. The ``limit(2)`` bounds what can reach the driver whatever
+    the plan, and the second row it admits is how a plan that is not
+    actually 1-row is caught: anything but exactly one row (or one
+    column) raises ``ValueError`` instead of silently picking a value.
+    """
+    rows = df.limit(2).collect()
+    if len(rows) != 1 or len(rows[0]) != 1:
+        raise ValueError(
+            f"collect_scalar expects one row of one column, got {rows!r}"
+        )
+    return rows[0][0]
 
 
 def tune_for_text_ops(spark: SparkSession) -> None:

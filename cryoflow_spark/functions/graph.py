@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cryoflow_spark.core.session import collect_scalar
+
 
 def _canonical_fold(order_col: str, value_col: str):
     """Aggregate column: sum of ``value_col`` folded in ascending
@@ -37,6 +39,18 @@ def _canonical_fold(order_col: str, value_col: str):
         ),
         F.lit(0.0),
         lambda acc, x: acc + x[value_col],
+    )
+
+
+def _dangling_mass(ranks: DataFrame) -> float:
+    """One PageRank round's dangling mass — the canonical fold of the
+    ranks flagged ``__dang`` — as a bounded driver scalar (one action)."""
+    return float(
+        collect_scalar(
+            ranks.filter(F.col("__dang")).agg(
+                F.coalesce(_canonical_fold("node", "rank"), F.lit(0.0))
+            )
+        )
     )
 
 
@@ -140,17 +154,6 @@ def pagerank(
     if n_nodes == 0:
         return nodes.select("node", F.round(F.lit(0.0), 9).alias("rank"))
 
-    def dangling_mass(cur: DataFrame) -> float:
-        return float(
-            cur.filter(F.col("__dang"))
-            .agg(
-                F.coalesce(
-                    _canonical_fold("node", "rank"), F.lit(0.0)
-                ).alias("__d")
-            )
-            .collect()[0][0]
-        )
-
     ranks = nodes.select(
         "node", "__dang", F.lit(1.0 / float(n_nodes)).alias("rank")
     )
@@ -165,7 +168,7 @@ def pagerank(
 
     with bounded_iteration(edges.sparkSession, e.count(), pause_aqe=True):
         for _ in range(int(n_iter)):
-            dang = dangling_mass(ranks)
+            dang = _dangling_mass(ranks)
             contrib = (
                 e.join(
                     ranks.select(F.col("node").alias("src"), "rank"), "src"
@@ -293,24 +296,13 @@ def personalized_pagerank(
         F.lit(0.0)
     )
 
-    def dangling_mass(cur: DataFrame) -> float:
-        return float(
-            cur.filter(F.col("__dang"))
-            .agg(
-                F.coalesce(
-                    _canonical_fold("node", "rank"), F.lit(0.0)
-                ).alias("__d")
-            )
-            .collect()[0][0]
-        )
-
     ranks = nodes.select("node", "__dang", p.alias("rank"))
     d = float(damping)
     from cryoflow_spark.core.session import bounded_iteration
 
     with bounded_iteration(edges.sparkSession, e.count(), pause_aqe=True):
         for _ in range(int(n_iter)):
-            dang = dangling_mass(ranks)
+            dang = _dangling_mass(ranks)
             contrib = (
                 e.join(
                     ranks.select(F.col("node").alias("src"), "rank"), "src"

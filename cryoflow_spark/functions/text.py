@@ -2162,49 +2162,26 @@ def bpe_train_merges(
     Scale: the corpus collapses ONCE to the ``(word, count)`` vocab
     table (keyed agg, map-side partials — ~10^7 rows at 100 TB);
     every round's work is then vocabulary-sized: one adjacent-pair
-    explode + keyed agg + a 1-row total-order argmax, COLLECTED (the
-    winning pair is a bounded 1-row scalar — the pagerank dangling-mass
-    pattern) and applied as literals in an in-row fold — NO corpus
-    rescan, one driver action per round where the previous broadcast
-    formulation paid an eager-checkpoint count job plus a broadcast
-    crossJoin per round. The collect doubles as the materializer of the
-    previous round's lazy vocab checkpoint (``checkpoint=False`` skips
-    the per-round truncation for plan-shape tests); rounds are
+    explode + keyed agg, a 1-row total-order argmax, and the merge
+    application as a broadcast 1-row crossJoin + in-row fold — NO
+    corpus rescan, no collect (the winning pair never touches the
+    driver). Per-round eager ``localCheckpoint`` truncates the
+    iterative lineage (the x20/x161 graph-loop pattern) at the cost of
+    one executor-side materialization job per round, whose rows stay
+    on the executors; ``checkpoint=False`` keeps the full lazy plan
+    for plan-shape tests, and building it runs no Spark job. Rounds are
     inherently sequential (each argmax depends on the previous merge),
     which is the algorithm, not the plan.
     """
-    rows = _bpe_train_merge_rows(df, text_col, n_merges, checkpoint)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("merge_round", T.IntegerType(), False),
-            T.StructField("pair_left", T.StringType(), True),
-            T.StructField("pair_right", T.StringType(), True),
-            T.StructField("merged", T.StringType(), True),
-            T.StructField("pair_count", T.LongType(), True),
-        ]
-    )
-    return df.sparkSession.createDataFrame(rows, schema).orderBy(
-        "merge_round"
-    )
-
-
-def _bpe_train_merge_rows(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int,
-    checkpoint: bool = True,
-) -> "list[tuple]":
-    """The x195 training loop, returning the merge list as Python rows
-    ``(merge_round, pair_left, pair_right, merged, pair_count)`` — the
-    1-row-per-round argmax is collected (bounded driver value), so each
-    round costs exactly one driver action and the merge applies as
-    literals. Shared by :func:`bpe_train_merges` (wraps the rows back
-    into a DataFrame for the registered query / TOML surface) and
-    :func:`bpe_encode_stats` (embeds them as a literal fold)."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
+
+    def _cp(frame):
+        # per-round lineage truncation; checkpoint=False keeps the full
+        # lazy plan so tests can pin the per-round shape (keyed aggs +
+        # broadcast 1-row merge application, nothing else)
+        return frame.localCheckpoint(eager=True) if checkpoint else frame
+
     words = (
         df.filter(F.col(text_col).isNotNull())
         .select(
@@ -2222,10 +2199,9 @@ def _bpe_train_merge_rows(
             "concat(filter(split(word, ''), c -> c != ''), array('</w>'))"
         ).alias("__s"),
     )
-    if checkpoint:
-        toks = toks.localCheckpoint(eager=False)
+    toks = _cp(toks)
 
-    rows: list[tuple] = []
+    merge_tables = []
     for rnd in range(1, int(n_merges) + 1):
         pairs = (
             toks.filter(F.size("__s") >= 2)
@@ -2246,31 +2222,48 @@ def _bpe_train_merge_rows(
         )
         # total-order argmax as a 1-row agg (never empty: NULL fields
         # when the pair table is dry) — min over (-count, l, r)
-        best = pairs.agg(
-            F.min(
-                F.struct(
-                    (-F.col("__c")).alias("negc"),
-                    F.col("__l").alias("l"),
-                    F.col("__r").alias("r"),
-                )
-            ).alias("__b")
-        ).select(
-            F.col("__b.l").alias("__l"),
-            F.col("__b.r").alias("__r"),
-            (-F.col("__b.negc")).cast("bigint").alias("__c"),
-        ).collect()[0]
-        if best["__l"] is None:
-            # pair table dry: this and every later round emit nothing
-            # (identical output to running the empty rounds through)
-            break
-        left, right, cnt = best["__l"], best["__r"], int(best["__c"])
-        rows.append((rnd, left, right, left + right, cnt))
+        best = (
+            pairs.agg(
+                F.min(
+                    F.struct(
+                        (-F.col("__c")).alias("negc"),
+                        F.col("__l").alias("l"),
+                        F.col("__r").alias("r"),
+                    )
+                ).alias("__b")
+            )
+            .select(
+                F.col("__b.l").alias("__l"),
+                F.col("__b.r").alias("__r"),
+                (-F.col("__b.negc")).cast("bigint").alias("__c"),
+            )
+        )
+        best = _cp(best)
+        merge_tables.append(
+            best.select(
+                F.lit(rnd).cast("int").alias("merge_round"),
+                F.col("__l").alias("pair_left"),
+                F.col("__r").alias("pair_right"),
+                F.concat("__l", "__r").alias("merged"),
+                F.col("__c").alias("pair_count"),
+            )
+        )
         # apply the merge greedily left-to-right in every word
-        fold = _bpe_apply_merge(F.col("__s"), F.lit(left), F.lit(right))
-        toks = toks.select("__wc", fold.alias("__s"))
-        if checkpoint:
-            toks = toks.localCheckpoint(eager=False)
-    return rows
+        fold = _bpe_apply_merge(
+            F.col("__s"), F.col("__l"), F.col("__r")
+        )
+        toks = _cp(
+            toks.crossJoin(F.broadcast(best)).select(
+                "__wc", fold.alias("__s")
+            )
+        )
+
+    out = merge_tables[0]
+    for t in merge_tables[1:]:
+        out = out.unionByName(t)
+    return out.filter(F.col("pair_left").isNotNull()).orderBy(
+        "merge_round"
+    )
 
 
 def bpe_encode_stats(
@@ -2298,17 +2291,23 @@ def bpe_encode_stats(
     corpus-specific twin of x119's fixed-tokenizer fertility. Documents
     with no whitespace tokens (null/empty text) emit no row.
 
-    Scale: training is x195 (one corpus collapse + vocab-sized rounds,
-    each round's 1-row argmax collected as a bounded driver value);
-    encoding touches each DISTINCT word once — the trained merge list
-    embeds as a LITERAL array (bounded by ``n_merges``) driving a
-    nested in-row fold (outer over the merges, inner the shared greedy
-    fold), so the old 1-row broadcast crossJoin disappears; the per-doc
-    report is one explode + an equi-join on word + one keyed agg.
+    Scale: training is x195 (one corpus collapse + vocab-sized rounds);
+    encoding touches each DISTINCT word once (the merge list rides ONE
+    broadcast row, the application is a nested in-row fold — outer over
+    the ≤ n_merges merges, inner the shared greedy fold); the per-doc
+    report is one explode + an equi-join on word + one keyed agg. No
+    collect; the merge table never touches the driver.
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    merge_rows = _bpe_train_merge_rows(df, text_col, n_merges)
+    merges = bpe_train_merges(df, text_col, n_merges)
+    packed = merges.agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("merge_round", "pair_left", "pair_right")
+            )
+        ).alias("__m")
+    )
     words = (
         df.filter(F.col(text_col).isNotNull())
         .select(
@@ -2327,26 +2326,16 @@ def bpe_encode_stats(
             ).alias("__s"),
         )
     )
-    if merge_rows:
-        lit_merges = F.array(
-            *[
-                F.struct(
-                    F.lit(left).alias("pair_left"),
-                    F.lit(right).alias("pair_right"),
-                )
-                for (_rnd, left, right, _merged, _cnt) in merge_rows
-            ]
-        )
-        enc = F.aggregate(
-            lit_merges,
+    encoded = words.crossJoin(F.broadcast(packed)).select(
+        "word",
+        F.aggregate(
+            F.col("__m"),
             F.col("__s"),
             lambda acc, m: _bpe_apply_merge(
                 acc, m["pair_left"], m["pair_right"]
             ),
-        )
-    else:
-        enc = F.col("__s")
-    encoded = words.select("word", enc.alias("__e"))
+        ).alias("__e"),
+    )
     counts = encoded.select(
         "word",
         (

@@ -167,67 +167,16 @@ def load_events(
 #: themselves, so it fails the moment a rotation edit (or a forgotten
 #: rotation) would let any query go staler than the policy allows.
 #:
-#: This list IS the policy ordering as of the round-14 artifacts: the
-#: round-15 window is the head 50 — the oldest-evidence r9 cohort
-#: (x07, x12–x14, x20, the approx twins, …) leads; positions 51+
-#: pre-commit the following rounds. New r15 registrations would be
-#: never-checked and PREPEND when they land.
-#: Operators newly registered in a round are never-checked and
-#: therefore PREPEND (tools/make_window.py emits the refreshed list).
+#: This list IS the policy ordering as of the round-15 artifacts: the
+#: round-16 window is the head 50 — the oldest-evidence r10 cohort
+#: (x02, x04, x06, x173/x174, q02–q12, q64–q81, …) leads; positions 51+
+#: pre-commit the following rounds. Operators newly registered in a
+#: round are never-checked and therefore PREPEND. After each driver
+#: round, ``python tools/make_window.py`` prints the refreshed list
+#: body in full, to paste between the brackets.
 _PRIORITY: list[str] = [
-    # --- round-15 window head: oldest-evidence cohort (regenerate
+    # --- round-16 window head: oldest-evidence cohort (regenerate
     # with tools/make_window.py after each driver round) ---
-    "x07_lsh_cosine_topk",  # last checked: r9
-    "x12_multimodal_meta",  # last checked: r9
-    "x13_multimodal_features",  # last checked: r9
-    "x14_frame_sample",  # last checked: r9
-    "x16_simhash_pairs",  # last checked: r9
-    "x20_dedup_clusters",  # last checked: r9
-    "x22_token_shards",  # last checked: r9
-    "x23_ivf_fixed_topk",  # last checked: r9
-    "x25_decontaminate",  # last checked: r9
-    "x26_repetition_stats",  # last checked: r9
-    "x27_quantized_topk",  # last checked: r9
-    "x28_source_mix",  # last checked: r9
-    "x29_chunk_documents",  # last checked: r9
-    "x30_weighted_sample",  # last checked: r9
-    "x33_incremental_dedup",  # last checked: r9
-    "x34_domain_cap",  # last checked: r9
-    "x35_corpus_freq_score",  # last checked: r9
-    "x36_dedup_segments",  # last checked: r9
-    "x37_profile_columns",  # last checked: r9
-    "x38_leakage_safe_split",  # last checked: r9
-    "x39_snapshot_diff",  # last checked: r9
-    "x40_ngram_novelty",  # last checked: r9
-    "x15_engine_minhash_dedup",  # last checked: r9
-    "x33_engine_incremental_dedup",  # last checked: r9
-    "x58_temperature_mix",  # last checked: r9
-    "x37_profile_approx",  # last checked: r9
-    "x76_correlation_approx",  # last checked: r9
-    "x79_quantiles_approx",  # last checked: r9
-    "x100_pq_adc_engine",  # last checked: r9
-    "x102_ivf_pq_engine",  # last checked: r9
-    "x103_minhash_audit",  # last checked: r9
-    "x141_outliers_approx",  # last checked: r9
-    "x157_ivf_pq_rerank",  # last checked: r9
-    "x158_session_exits",  # last checked: r9
-    "x159_auc_report",  # last checked: r9
-    "x160_calibration_curve",  # last checked: r9
-    "x162_fleiss_kappa",  # last checked: r9
-    "x163_hard_negatives",  # last checked: r9
-    "x164_attribution_report",  # last checked: r9
-    "x161_event_pagerank",  # last checked: r9
-    "x165_rrf_fusion",  # last checked: r9
-    "x166_ndcg_eval",  # last checked: r9
-    "x167_theil_sen_trend",  # last checked: r9
-    "x168_spearman",  # last checked: r9
-    "x157_rerank_engine",  # last checked: r9
-    "x169_token_concentration",  # last checked: r9
-    "x170_mrr_eval",  # last checked: r9
-    "x171_growth_accounting",  # last checked: r9
-    "q01_pricing_summary",  # last checked: r9
-    "q25_asof_join",  # last checked: r9
-    # --- positions 51+: pre-committed following rounds ---
     "x02_dedup_normalized",  # last checked: r10
     "x04_jaccard_dedup",  # last checked: r10
     "x06_embedding_neardup",  # last checked: r10
@@ -278,6 +227,7 @@ _PRIORITY: list[str] = [
     "q79_disjunctive_revenue",  # last checked: r10
     "q80_product_profit",  # last checked: r10
     "q81_priority_shipping",  # last checked: r10
+    # --- positions 51+: pre-committed following rounds ---
     "x43_semantic_dedup",  # last checked: r11
     "x44_html_to_text",  # last checked: r11
     "x45_quantile_gate",  # last checked: r11
@@ -478,6 +428,56 @@ _PRIORITY: list[str] = [
     "q61_market_share",  # last checked: r14
     "q62_customer_distribution",  # last checked: r14
     "q63_sales_opportunity",  # last checked: r14
+    "x07_lsh_cosine_topk",  # last checked: r15
+    "x12_multimodal_meta",  # last checked: r15
+    "x13_multimodal_features",  # last checked: r15
+    "x14_frame_sample",  # last checked: r15
+    "x16_simhash_pairs",  # last checked: r15
+    "x20_dedup_clusters",  # last checked: r15
+    "x22_token_shards",  # last checked: r15
+    "x23_ivf_fixed_topk",  # last checked: r15
+    "x25_decontaminate",  # last checked: r15
+    "x26_repetition_stats",  # last checked: r15
+    "x27_quantized_topk",  # last checked: r15
+    "x28_source_mix",  # last checked: r15
+    "x29_chunk_documents",  # last checked: r15
+    "x30_weighted_sample",  # last checked: r15
+    "x33_incremental_dedup",  # last checked: r15
+    "x34_domain_cap",  # last checked: r15
+    "x35_corpus_freq_score",  # last checked: r15
+    "x36_dedup_segments",  # last checked: r15
+    "x37_profile_columns",  # last checked: r15
+    "x38_leakage_safe_split",  # last checked: r15
+    "x39_snapshot_diff",  # last checked: r15
+    "x40_ngram_novelty",  # last checked: r15
+    "x15_engine_minhash_dedup",  # last checked: r15
+    "x33_engine_incremental_dedup",  # last checked: r15
+    "x58_temperature_mix",  # last checked: r15
+    "x37_profile_approx",  # last checked: r15
+    "x76_correlation_approx",  # last checked: r15
+    "x79_quantiles_approx",  # last checked: r15
+    "x100_pq_adc_engine",  # last checked: r15
+    "x102_ivf_pq_engine",  # last checked: r15
+    "x103_minhash_audit",  # last checked: r15
+    "x141_outliers_approx",  # last checked: r15
+    "x157_ivf_pq_rerank",  # last checked: r15
+    "x158_session_exits",  # last checked: r15
+    "x159_auc_report",  # last checked: r15
+    "x160_calibration_curve",  # last checked: r15
+    "x162_fleiss_kappa",  # last checked: r15
+    "x163_hard_negatives",  # last checked: r15
+    "x164_attribution_report",  # last checked: r15
+    "x161_event_pagerank",  # last checked: r15
+    "x165_rrf_fusion",  # last checked: r15
+    "x166_ndcg_eval",  # last checked: r15
+    "x167_theil_sen_trend",  # last checked: r15
+    "x168_spearman",  # last checked: r15
+    "x157_rerank_engine",  # last checked: r15
+    "x169_token_concentration",  # last checked: r15
+    "x170_mrr_eval",  # last checked: r15
+    "x171_growth_accounting",  # last checked: r15
+    "q01_pricing_summary",  # last checked: r15
+    "q25_asof_join",  # last checked: r15
 ]
 
 

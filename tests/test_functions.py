@@ -800,8 +800,9 @@ def test_ivf_fold_assign_matches_vectorized(spark):
 def test_library_collects_are_bounded():
     """Guard: no library operator may collect() corpus-proportional data to
     the driver. Every .collect() in cryoflow_spark must sit behind an
-    explicit .limit(...) in the same expression chain (currently only the
-    IVF trainer)."""
+    explicit .limit(...) in the same expression chain (e.g. the IVF/PQ
+    trainer samples, the Misra-Gries summary, the personalized-PageRank
+    seeds and core.session.collect_scalar)."""
     import re
     from pathlib import Path
 
@@ -821,6 +822,21 @@ def test_library_collects_are_bounded():
             offenders.append((str(py), n, bounded))
     assert total >= 1  # the IVF trainer's bounded collect exists
     assert not offenders, f"unbounded driver collect in library code: {offenders}"
+
+
+def test_collect_scalar_requires_one_row_one_column(spark):
+    """core.session.collect_scalar returns the value of a 1x1 frame and
+    refuses anything else instead of picking a value."""
+    from cryoflow_spark.core.session import collect_scalar
+
+    assert collect_scalar(spark.range(5).agg(F.sum("id"))) == 10
+    for bad in (
+        spark.range(0),
+        spark.range(3),
+        spark.range(1).selectExpr("id", "id"),
+    ):
+        with pytest.raises(ValueError, match="one row of one column"):
+            collect_scalar(bad)
 
 
 def test_two_phase_cc_matches_label_prop(spark):

@@ -3,16 +3,17 @@
 The rotation policy (queries/__init__.py): the 50-slot driver window for
 the upcoming round is
 
-    all never-driver-checked queries first (newest registrations lead),
+    all never-driver-checked queries first (base registration order),
     then strictly oldest-driver-evidence-first,
     ties broken by base registration order.
 
 "Driver evidence" for a query is the latest round whose committed
 ``CORRECTNESS_r*.json`` contains it. This module is the single source of
-that derivation: ``tools/make_window.py`` prints the window to paste into
-``_PRIORITY``, and ``tests/test_registry.py::
-test_rotation_policy_bounded_staleness`` asserts the committed head-50
-equals it.
+that derivation: ``python tools/make_window.py`` prints the full policy
+ordering of every registered query (its head 50 is the window), ready
+to paste as the body of ``_PRIORITY`` after each driver round, and
+``tests/test_registry.py::test_rotation_policy_bounded_staleness``
+asserts the committed head-50 equals the window.
 """
 
 from __future__ import annotations
@@ -43,9 +44,10 @@ def last_checked(repo: str = REPO) -> tuple[dict[str, int], int]:
     return last, latest
 
 
-def derive_window(registry_names: list[str], repo: str = REPO) -> list[str]:
-    """The policy window: never-checked first (registration order), then
-    oldest-evidence-first with registration-order tiebreak."""
+def derive_order(registry_names: list[str], repo: str = REPO) -> list[str]:
+    """The full policy ordering: never-checked first (registration
+    order), then oldest-evidence-first with registration-order
+    tiebreak."""
     last, _ = last_checked(repo)
     pos = {n: i for i, n in enumerate(registry_names)}
     never = [n for n in registry_names if n not in last]
@@ -53,7 +55,12 @@ def derive_window(registry_names: list[str], repo: str = REPO) -> list[str]:
         (n for n in registry_names if n in last),
         key=lambda n: (last[n], pos[n]),
     )
-    return (never + checked)[:WINDOW]
+    return never + checked
+
+
+def derive_window(registry_names: list[str], repo: str = REPO) -> list[str]:
+    """The policy window: the head of :func:`derive_order`."""
+    return derive_order(registry_names, repo)[:WINDOW]
 
 
 def main() -> None:
@@ -64,10 +71,14 @@ def main() -> None:
 
     all_queries()  # trigger registration
     base = list(REGISTRY)  # base registration order, not _PRIORITY order
-    win = derive_window(base)
     last, latest = last_checked()
-    print(f"# round-{latest + 1} window (never-checked first, then oldest)")
-    for n in win:
+    print(f"    # --- round-{latest + 1} window head: oldest-evidence "
+          "cohort (regenerate")
+    print("    # with tools/make_window.py after each driver round) ---")
+    for i, n in enumerate(derive_order(base)):
+        if i == WINDOW:
+            print(f"    # --- positions {WINDOW + 1}+: pre-committed "
+                  "following rounds ---")
         print(f'    "{n}",  # last checked: r{last.get(n, 0) or "never"}')
 
 
